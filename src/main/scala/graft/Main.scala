@@ -3,7 +3,7 @@ package graft
 import graft.changelog.{ChangelogGenerator, ChangelogSpec}
 import graft.core.Types
 import graft.lake.LakeTable
-import graft.streaming.{Bootstrap, CdcPipeline}
+import graft.streaming.{Bootstrap, CdcPipeline, Feed, RouteEngine}
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry — the analog of the reference's run modes
@@ -73,7 +73,7 @@ object Main {
           // a route whose predicate matched nothing never creates outDir;
           // readFeed (not a raw parquet read) so folded history counts too
           val n = if (new java.io.File(r.outDir).exists())
-            graft.streaming.ConfigPipeline.readFeed(spark, r.outDir).count() else 0L
+            Feed.readFeed(spark, r.outDir).count() else 0L
           println(s"route ${r.name}: $n messages at ${r.outDir}")
         }
       }
@@ -90,10 +90,11 @@ object Main {
       val res = Bootstrap.run(table, spark.read.parquet(parquet))
       println(s"bootstrap: upserted=${res.upserted} buckets=${res.touchedBuckets}")
 
+    // one unfiltered changefeed route: the epoch=N feed layout (read-feed)
     case "changefeed" :: log :: outDir :: cp :: _ =>
-      graft.streaming.ChangefeedSink.runToCompletion(spark,
-        CdcPipeline.Config(log, cp), outDir, reserveRawData = true)
-      println(s"changefeed: ${spark.read.parquet(outDir).count()} messages at $outDir")
+      RouteEngine.runToCompletion(spark, Feed.changefeed(outDir, reserveRawData = true),
+        CdcPipeline.Config(log, cp))
+      println(s"changefeed: ${Feed.readFeed(spark, outDir).count()} messages at $outDir")
 
     // manual position override — the analog of the reference's
     // `-position file pos` mode (main.go:103-119); same caveat: operator
@@ -126,11 +127,9 @@ object Main {
       // optional 6th arg: snapshot dir pattern with {table} placeholder —
       // the stock handoff for late-discovered tables (same as the YAML
       // route's snapshot_dir_pattern)
-      val snapPattern = rest.headOption
       val d = graft.streaming.DynamicRoutePipeline.Config(
         routeCol, pattern, tablesDir, Types.transcriptKey, Seq("conv_id"),
-        snapshotDirFor = n => snapPattern.map(_.replace("{table}", n))
-          .filter(p => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p))))
+        snapshotDirFor = graft.streaming.DynamicRoutePipeline.snapshotDirs(rest.headOption))
       val state = graft.streaming.DynamicRoutePipeline.runToCompletion(
         spark, d, CdcPipeline.Config(log, cp))
       state.names.foreach { n =>
@@ -140,21 +139,21 @@ object Main {
       }
 
     // changefeed feed maintenance — fold old epoch dirs into consolidated
-    // parquet (lossless; see ConfigPipeline.foldFeed for the crash/replay
+    // parquet (lossless; see Feed.foldFeed for the crash/replay
     // contract). The feed-side analog of `compact`.
     case "fold-feed" :: outDir :: rest =>
       val retain = rest.headOption.map(_.toInt).getOrElse(8)
-      graft.streaming.ConfigPipeline.foldFeed(spark, outDir, retain) match {
+      Feed.foldFeed(spark, outDir, retain) match {
         case Some(fc) => println(s"folded through epoch=${fc.watermark} " +
           s"(${fc.dirs.size} generation(s)); " +
-          s"${graft.streaming.ConfigPipeline.readFeed(spark, outDir).count()} messages readable")
+          s"${Feed.readFeed(spark, outDir).count()} messages readable")
         case None => println("nothing to fold")
       }
 
     // read a changefeed out dir the fold-aware way (folded generations ∪
     // live epochs — a plain parquet read would miss folded history)
     case "read-feed" :: outDir :: rest =>
-      val df = graft.streaming.ConfigPipeline.readFeed(spark, outDir)
+      val df = Feed.readFeed(spark, outDir)
       println(s"messages=${df.count()}")
       df.show(rest.headOption.map(_.toInt).getOrElse(10), truncate = false)
 

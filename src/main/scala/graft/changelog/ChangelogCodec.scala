@@ -21,7 +21,7 @@ object ChangelogCodec {
 
   /** The canonical meta-column inventory: every non-payload column a decode
     * can attach. Downstream "which columns are the row image?" filters must
-    * derive from these two (EventTransform, ConfigPipeline) — a third
+    * derive from these two (ChangefeedOut, ConfigPipeline) — a third
     * hand-written list is how a new meta column leaks into a sink payload.
     */
   val BeforeCol = "_before"
@@ -32,41 +32,29 @@ object ChangelogCodec {
     * missing columns parse to null, widened types parse wide), carrying the
     * per-event `_schema_id` through so the merge can evolve the table from
     * the observed watermark without a separate scan.
-    */
-  def decode(wire: DataFrame, schema: StructType): DataFrame = {
-    // pick the image string first, parse ONCE (JSON parse dominates decode CPU)
-    val img = from_json(
-      when(col("op") === OpDelete, col("before")).otherwise(col("after")), schema)
-    wire.select(
-      col("op").as("_op"),
-      col("pos").as("_pos"),
-      col("ts").as("_event_ts"),
-      col("schema_id").as("_schema_id"),
-      img.as("_img")
-    ).select(col("_op"), col("_pos"), col("_event_ts"), col("_schema_id"), col("_img.*"))
-  }
-
-  /** [[decode]] plus a `_before` struct column carrying the BEFORE image —
+    *
+    * `withBefore` adds a `_before` struct column carrying the BEFORE image —
     * parsed ONLY for updates (null otherwise), because that is the only op
     * whose old image any consumer reads: the changefeed's `reserve_raw_data`
     * emits `raw` = old row iff action == update (reference:
     * service/endpoint/kafka.go:216-218, endpoint.go:284-306 oldRowMap reads
-    * `req.Old`). The merge path stays on [[decode]] — one parse per event.
+    * `req.Old`). The merge path decodes without it — one parse per event.
     */
-  def decodeWithBefore(wire: DataFrame, schema: StructType): DataFrame = {
+  def decode(wire: DataFrame, schema: StructType, withBefore: Boolean = false): DataFrame = {
+    // pick the image string first, parse ONCE (JSON parse dominates decode CPU)
     val img = from_json(
       when(col("op") === OpDelete, col("before")).otherwise(col("after")), schema)
-    val old = from_json(when(col("op") === OpUpdate, col("before")), schema)
-    wire.select(
-      col("op").as("_op"),
-      col("pos").as("_pos"),
-      col("ts").as("_event_ts"),
-      col("schema_id").as("_schema_id"),
-      old.as("_before"),
-      img.as("_img")
-    ).select(col("_op"), col("_pos"), col("_event_ts"), col("_schema_id"),
-      col("_before"), col("_img.*"))
+    val meta = Seq("_op" -> col("op"), "_pos" -> col("pos"), "_event_ts" -> col("ts"),
+      "_schema_id" -> col("schema_id")) ++
+      (if (withBefore) Seq(BeforeCol -> from_json(when(col("op") === OpUpdate, col("before")), schema))
+       else Nil)
+    wire.select(meta.map { case (n, c) => c.as(n) } :+ img.as("_img"): _*)
+      .select(meta.map { case (n, _) => col(n) } :+ col("_img.*"): _*)
   }
+
+  /** [[decode]] with the before image. */
+  def decodeWithBefore(wire: DataFrame, schema: StructType): DataFrame =
+    decode(wire, schema, withBefore = true)
 
   /** Decode a STANDARD CDC envelope — the Debezium/Maxwell-style JSON wire
     * shape (`op: c/u/d/r`, `before`, `after`, `ts_ms`, `source{file,pos,lsn,
@@ -134,7 +122,7 @@ object ChangelogCodec {
     // re-evaluate the wire per conjunct (from_json ×3, or the caller's
     // envelope synthesis ×2 — both measured); row elimination therefore
     // belongs to the caller's SOURCE, where a text-scan filter is free —
-    // see the `wire_format: debezium` ingest in ConfigPipeline.
+    // see the `wire_format: debezium` source in RouteEngine.
     val opCol = when(e("op") === "d", OpDelete)
       .when(e("op") === "u", OpUpdate)
       .when(e("op").isNotNull, OpInsert) // c, r (snapshot read), unknown → upsert
@@ -142,7 +130,9 @@ object ChangelogCodec {
         lit("decodeDebezium: undecodable envelope (tombstone, blank or " +
           "invalid JSON — filter non-envelope records before decoding, " +
           "as the debezium wire_format pipeline does): "),
-        col(valueCol))).cast("string"))
+        // a SQL-NULL wire value (a Kafka tombstone record) would null the
+        // whole concat and lose the diagnostic
+        coalesce(col(valueCol), lit("<null value>")))).cast("string"))
     val src = e("source")
     val filePos = coalesce(src("pos"), lit(0L))
     val posCol = when(src("lsn").isNotNull, src("lsn"))

@@ -89,10 +89,10 @@ final case class GraftConfig(
     // changefeed feed retention (the broker-side message aging the
     // reference's MQ sinks get for free): every `feedFoldEvery` micro-batches
     // each changefeed route's out dir is folded asynchronously
-    // (ConfigPipeline.foldFeed — lossless), keeping the newest
+    // (Feed.foldFeed — lossless), keeping the newest
     // `feedRetainEpochs` epoch dirs live. OPT-IN (default 0 = never fold):
     // folding moves history into `_folded/` generations that only
-    // fold-aware readers (ConfigPipeline.readFeed, `Main read-feed`) see —
+    // fold-aware readers (Feed.readFeed, `Main read-feed`) see —
     // a plain `spark.read.parquet(outDir)` consumer would silently lose the
     // folded epochs once deferred cleanup deletes them, so the on-disk
     // contract change must be an explicit choice. Long-running streams

@@ -189,6 +189,38 @@ object MergeInto {
   private def pidOr(latest: TableMeta, pipelineId: String): String =
     if (pipelineId.nonEmpty) pipelineId else latest.lastPipelineId
 
+  /** Empty batch: advance the fence only. */
+  private def commitEmpty(table: LakeTable, epoch: Long, pipelineId: String): MergeResult = {
+    table.commitAtomic(latest => latest.copy(
+      version = latest.version + 1, lastEpoch = epoch,
+      lastPipelineId = pidOr(latest, pipelineId),
+      history = latest.history :+ CommitInfo(latest.version + 1, epoch,
+        latest.lastOffset, System.currentTimeMillis(), "merge-empty")))
+    MergeResult(epoch, skipped = false, 0, 0, 0, 0)
+  }
+
+  /** The schema a batch's `_schema_id` watermark evolves the table to. */
+  private def evolveTarget(registry: Map[Int, StructType], sid: Int): StructType =
+    registry.getOrElse(sid, throw new IllegalStateException(
+      s"batch carries schema_id $sid but registry has no schema for it"))
+
+  /** Storage layout of change rows with the given `present` columns:
+    * `schema`'s columns (payload nulled on deletes, so delete winners become
+    * tombstone rows — key + pos), then pos, ts and the del flag.
+    */
+  private def storageCols(table: LakeTable, schema: StructType, keyCols: Seq[String],
+      present: Set[String]): Seq[Column] = {
+    val isDel = col("_op") === OpDelete
+    schema.fields.map { f =>
+      val base =
+        if (!present.contains(f.name)) lit(null)
+        else if (keyCols.contains(f.name)) col(f.name)
+        else when(isDel, lit(null)).otherwise(col(f.name))
+      base.cast(f.dataType).as(f.name)
+    }.toSeq :+ col("_pos").as(table.PosCol) :+ col("_event_ts").as(table.TsCol) :+
+      isDel.as("del")
+  }
+
   /** Merge one micro-batch (decoded merge-input layout: `_op,_pos,_event_ts`
     * [,`_schema_id`] + row columns) into `table`, committing `(epoch,
     * maxPos)` atomically with the snapshot. Replayed epochs
@@ -211,19 +243,29 @@ object MergeInto {
     val m0 = table.refresh()
     if (fenced(m0, epoch, pipelineId, allowTakeover))
       return MergeResult(epoch, skipped = true, 0, 0, 0, 0)
+    val sid = if (batchSchemaId >= 0) batchSchemaId else m0.schemaId
     if (mode == "mor")
-      mergeMor(table, m0, batch, epoch, salt, registry, batchSchemaId, pipelineId, rowsHint)
-    else mergeCow(table, m0, batch, epoch, salt, registry, batchSchemaId, pipelineId)
+      mergeMor(table, m0, batch, epoch, salt, registry, sid, pipelineId, rowsHint)
+    else mergeCow(table, m0, batch, epoch, salt, registry, sid, pipelineId)
   }
+
+  /** The batch stats both modes commit: rows, deletes, max pos, replays
+    * (pos at/below the applied offset) and the `_schema_id` watermark.
+    */
+  private def batchStats(batch: DataFrame, m0: TableMeta, sid: Int): Seq[Column] = Seq(
+    count(lit(1)).as("n"),
+    sum(when(col("_op") === OpDelete, 1L).otherwise(0L)).as("dels"),
+    max(col("_pos")).as("maxPos"),
+    sum(when(col("_pos") <= m0.lastOffset, 1L).otherwise(0L)).as("replays"),
+    (if (batch.columns.contains("_schema_id")) max(col("_schema_id"))
+     else max(lit(sid))).as("maxSid"))
 
   // ------------------------------------------------------------------- MOR
 
   private def mergeMor(table: LakeTable, m0: TableMeta, batch: DataFrame,
       epoch: Long, salt: Int, registry: Map[Int, StructType],
-      batchSchemaIdIn: Int, pipelineId: String, rowsHint: Long): MergeResult = {
+      batchSchemaId: Int, pipelineId: String, rowsHint: Long): MergeResult = {
     val keyCols = m0.keyCols
-    val hasSid = batch.columns.contains("_schema_id")
-    val batchSchemaId = if (batchSchemaIdIn >= 0) batchSchemaIdIn else m0.schemaId
     val fileSchema = registry.getOrElse(batchSchemaId,
       if (batchSchemaId == m0.schemaId) m0.schema
       else m0.schemaFor(batchSchemaId))
@@ -235,8 +277,6 @@ object MergeInto {
     // the losers until compaction folds them; `salt` retains the salted
     // two-phase dedup for callers that want slimmer deltas on hot keys.)
     val dedup = if (salt > 1) lwwDedup(batch, keyCols, salt) else batch
-    val isDel = col("_op") === OpDelete
-    val batchCols = batch.columns.toSet
 
     // ONE job: observe global metrics on the deduped stream, project to the
     // storage layout (batch schema; delete winners become tombstone rows —
@@ -246,27 +286,12 @@ object MergeInto {
     val obs = new Observation(s"merge-$epoch-${UUID.randomUUID().toString.take(6)}")
     val commitId = UUID.randomUUID().toString.take(12)
     val commitRel = s"data/$commitId"
-    val sidMetric = if (hasSid) max(col("_schema_id")) else max(lit(batchSchemaId))
+    val stats = batchStats(batch, m0, batchSchemaId)
     timed("mor-write") {
       dedup // observe on the pre-projection node so _schema_id is in scope
-        .observe(obs,
-          count(lit(1)).as("n"),
-          sum(when(isDel, 1L).otherwise(0L)).as("dels"),
-          max(col("_pos")).as("maxPos"),
-          sum(when(col("_pos") <= m0.lastOffset, 1L).otherwise(0L)).as("replays"),
-          sidMetric.as("maxSid"))
-        .select(
-          (fileSchema.fields.map { f =>
-            val base =
-              if (!batchCols.contains(f.name)) lit(null)
-              else if (keyCols.contains(f.name)) col(f.name)
-              else when(isDel, lit(null)).otherwise(col(f.name))
-            base.cast(f.dataType).as(f.name)
-          }.toSeq
-            :+ col("_pos").as(table.PosCol)
-            :+ col("_event_ts").as(table.TsCol)
-            :+ isDel.as("del")
-            :+ table.bucketExpr(m0.numBuckets, m0.bucketCols).as("bkt")): _*)
+        .observe(obs, stats.head, stats.tail: _*)
+        .select(storageCols(table, fileSchema, keyCols, batch.columns.toSet)
+          :+ table.bucketExpr(m0.numBuckets, m0.bucketCols).as("bkt"): _*)
         // explicit partition count (AQE would coalesce small shuffles into
         // one sort-based dynamic-partition writer — serial and slower),
         // fanned out with a salt so writer waves stay fine-grained relative
@@ -282,14 +307,7 @@ object MergeInto {
     // included — so the observation never fires. That can only happen for a
     // provably empty batch, which is exactly the fence-only case below.
     val nDedup = if (row.isEmpty) 0L else row("n").asInstanceOf[Long]
-    if (nDedup == 0) { // empty batch: advance the fence only
-      table.commitAtomic(latest => latest.copy(
-        version = latest.version + 1, lastEpoch = epoch,
-        lastPipelineId = pidOr(latest, pipelineId),
-        history = latest.history :+ CommitInfo(latest.version + 1, epoch,
-          latest.lastOffset, System.currentTimeMillis(), "merge-empty")))
-      return MergeResult(epoch, skipped = false, 0, 0, 0, 0)
-    }
+    if (nDedup == 0) return commitEmpty(table, epoch, pipelineId)
     val nDeletes = row("dels").asInstanceOf[Long]
     val maxPos = row("maxPos").asInstanceOf[Long]
     val nReplays = row("replays").asInstanceOf[Long]
@@ -313,8 +331,7 @@ object MergeInto {
         schemas += batchSchemaId.toString -> fileSchema.json
       var schemaId = latest.schemaId
       if (maxSid > schemaId) {
-        val target = registry.getOrElse(maxSid, throw new IllegalStateException(
-          s"batch carries schema_id $maxSid but registry has no schema for it"))
+        val target = evolveTarget(registry, maxSid)
         LakeTable.checkCompatible(latest.schema, target)
         schemas += maxSid.toString -> target.json
         schemaId = maxSid
@@ -341,36 +358,21 @@ object MergeInto {
 
   private def mergeCow(table: LakeTable, m0: TableMeta, batch: DataFrame,
       epoch: Long, salt: Int, registry: Map[Int, StructType],
-      batchSchemaIdIn: Int, pipelineId: String): MergeResult = {
+      batchSchemaId: Int, pipelineId: String): MergeResult = {
     val keyCols = m0.keyCols
-    val hasSid = batch.columns.contains("_schema_id")
     // same contract as mergeMor: an explicit batchSchemaId declares how a
     // batch WITHOUT a _schema_id column is shaped, so the evolution path
-    // below fires for it too (previously cow silently ignored the argument
-    // and dropped new-column data on such batches)
-    val batchSchemaId = if (batchSchemaIdIn >= 0) batchSchemaIdIn else m0.schemaId
+    // below fires for it too
     val bucket = table.bucketExpr(m0.numBuckets, m0.bucketCols)
 
     val dedup = lwwDedup(batch, keyCols, salt)
       .withColumn("_bucket", bucket)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val sidAgg = if (hasSid) max(col("_schema_id")) else max(lit(batchSchemaId))
-      val stats = dedup.groupBy("_bucket").agg(
-        count(lit(1)).as("n"),
-        sum(when(col("_op") === OpDelete, 1L).otherwise(0L)).as("dels"),
-        max(col("_pos")).as("maxPos"),
-        sum(when(col("_pos") <= m0.lastOffset, 1L).otherwise(0L)).as("replays"),
-        sidAgg.as("maxSid")).collect()
+      val aggs = batchStats(batch, m0, batchSchemaId)
+      val stats = dedup.groupBy("_bucket").agg(aggs.head, aggs.tail: _*).collect()
 
-      if (stats.isEmpty) {
-        table.commitAtomic(latest => latest.copy(
-          version = latest.version + 1, lastEpoch = epoch,
-          lastPipelineId = pidOr(latest, pipelineId),
-          history = latest.history :+ CommitInfo(latest.version + 1, epoch,
-            latest.lastOffset, System.currentTimeMillis(), "merge-empty")))
-        return MergeResult(epoch, skipped = false, 0, 0, 0, 0)
-      }
+      if (stats.isEmpty) return commitEmpty(table, epoch, pipelineId)
 
       val touched = stats.map(_.getInt(0)).toSet
       val nDedup = stats.map(_.getLong(1)).sum
@@ -380,30 +382,10 @@ object MergeInto {
 
       // evolve BEFORE the rewrite so new base files carry the new schema
       val maxSid = stats.map(_.getInt(5)).max
-      if (maxSid > m0.schemaId) {
-        val target = registry.getOrElse(maxSid, throw new IllegalStateException(
-          s"batch carries schema_id $maxSid but registry has no schema for it"))
-        table.evolveSchema(maxSid, target)
-      }
+      if (maxSid > m0.schemaId) table.evolveSchema(maxSid, evolveTarget(registry, maxSid))
       val m = table.meta
       val rowCols = m.schema.fieldNames.toSeq
       val batchCols = batch.columns.toSet
-      val isDel = col("_op") === OpDelete
-
-      def toStorage(winners: DataFrame): DataFrame = {
-        val wCols = winners.columns.toSet
-        winners.select(
-          (m.schema.fields.map { f =>
-            val base =
-              if (!wCols.contains(f.name)) lit(null)
-              else if (keyCols.contains(f.name)) col(f.name)
-              else when(isDel, lit(null)).otherwise(col(f.name))
-            base.cast(f.dataType).as(f.name)
-          }.toSeq
-            :+ col("_pos").as(table.PosCol)
-            :+ col("_event_ts").as(table.TsCol)
-            :+ isDel.as("del")): _*)
-      }
 
       val keysOnly = dedup.select(keyCols.map(col): _*)
       val keySet = if (nDedup <= BroadcastKeyLimit) broadcast(keysOnly) else keysOnly
@@ -425,7 +407,8 @@ object MergeInto {
           rowCols.filter(batchCols.contains)).map(col): _*)
       val winners = lwwDedup(matchedAsEvents.unionByName(batchEvents,
         allowMissingColumns = true), keyCols)
-      val finalRows = unmatched.unionByName(toStorage(winners))
+      val finalRows = unmatched.unionByName(
+        winners.select(storageCols(table, m.schema, keyCols, winners.columns.toSet): _*))
         .withColumn("bkt", bucket)
 
       val commitId = UUID.randomUUID().toString.take(12)
@@ -533,21 +516,16 @@ object MergeInto {
   }
 
   /** Non-blocking compaction trigger: fires [[compact]] on a daemon thread,
-    * at most one in flight PER TABLE (keyed by table root — a JVM-global flag
-    * would let one table's compaction starve every other route's in a
-    * multi-table pipeline) — ingest keeps streaming while maintenance folds
-    * deltas (async table services, as on a real lake).
+    * at most one in flight PER TABLE (keyed by table root), while ingest
+    * keeps streaming.
     */
-  private val compacting =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val compacting = new graft.core.SingleFlight("compaction")
   def maybeCompactAsync(table: LakeTable, ratio: Double, minRows: Long,
       gcTombstones: Boolean = true): Boolean = {
     val m = table.meta
     val deltaRows = m.files.filter(_.kind == "delta").map(_.rows).sum
     val baseRows = m.files.filter(_.kind == "base").map(_.rows).sum
-    val due = deltaRows >= minRows && deltaRows >= ratio * baseRows
-    if (!due || compacting.putIfAbsent(table.root.toString, java.lang.Boolean.TRUE) != null)
-      return false
+    if (deltaRows < minRows || deltaRows < ratio * baseRows) return false
     // replay-safe tombstone GC (see compact's contract): drop tombstones
     // below the PREVIOUS compaction's applied-offset watermark — without
     // this a delete-heavy stream accumulates tombstone rows forever (a slow
@@ -555,28 +533,13 @@ object MergeInto {
     // nothing; the watermark is persisted in the table meta so it survives
     // restarts.
     val gcBelow = if (gcTombstones) m.lastCompactOffset else Long.MinValue
-    val t = new Thread(() =>
-      try compact(table, gcTombstonesBelowPos = gcBelow)
-      catch { case e: Throwable =>
-        System.err.println(s"[graft] async compaction failed (will retry later): $e")
-      } finally { compacting.remove(table.root.toString); () }, "graft-compactor")
-    t.setDaemon(true)
-    t.start()
-    true
+    compacting.start(table.root.toString)(compact(table, gcTombstonesBelowPos = gcBelow))
   }
 
   /** Block until no async compaction is in flight — all tables, or one. */
-  def awaitCompaction(): Unit = { while (!compacting.isEmpty) Thread.sleep(50) }
+  def awaitCompaction(): Unit = compacting.awaitAll()
   def awaitCompaction(table: LakeTable): Unit =
-    while (compacting.containsKey(table.root.toString)) Thread.sleep(50)
-
-  /** Delta-vs-base row ratio (compaction trigger input). */
-  def deltaRatio(table: LakeTable): Double = {
-    val m = table.meta
-    val d = m.files.filter(_.kind == "delta").map(_.rows).sum.toDouble
-    val b = m.files.filter(_.kind == "base").map(_.rows).sum.toDouble
-    if (b == 0) (if (d > 0) Double.MaxValue else 0.0) else d / b
-  }
+    while (compacting.inFlight(table.root.toString)) Thread.sleep(50)
 
   /** Enumerate staged files under `commitRel` with row counts and the
     * applied-pos max — straight from parquet footers, no data re-scan.

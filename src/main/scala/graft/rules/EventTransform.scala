@@ -1,6 +1,6 @@
 package graft.rules
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 /** One sink operation emitted by a user transform — the typed union of the
@@ -35,28 +35,44 @@ object EventTransform {
   def run[T](ds: Dataset[T], t: EventTransform[T]): Dataset[SinkOp] =
     ds.flatMap(e => t(e))(sinkOpEncoder)
 
-  /** Ops-per-event cap in [[runOrdered]]'s ord encoding (4 bits). */
+  /** Ops-per-event cap in the ord encoding (4 bits). */
   val MaxOpsPerEvent = 16
 
-  /** [[run]] with a TOTAL op order attached, for structure-level application
-    * ([[graft.merge.SinkOpState]]): input events carry their stream position;
-    * each emitted op gets `ord = pos * 16 + index-within-event` — stream
-    * order first, then intra-script emission order, exactly the order the
-    * reference's single-threaded applier executes a script's ___RET___ ops
-    * in (service/endpoint/redis.go:92-100 pipelined in append order). At
+  /** The one op-order encoding, shared by both `runOrdered`s:
+    * `ord = pos * 16 + i` — stream order first, then the op's index within
+    * its event, exactly the order the reference's single-threaded applier
+    * executes a script's ___RET___ ops in (service/endpoint/redis.go:92-100
+    * pipelined in append order). `pos * 16` wraps past Long.MaxValue/16 (a
+    * MySQL fileIndex<<32|pos coordinate can reach that if the 32-bit offset
+    * validation upstream is bypassed), so out-of-range rows raise instead
+    * of silently reordering the op stream: assert_true is null on success,
+    * so the coalesce is the ord itself.
+    */
+  def ord(pos: Column, i: Column): Column = {
+    val bound = Long.MaxValue / MaxOpsPerEvent
+    coalesce(assert_true(pos.between(-bound, bound),
+        lit(s"runOrdered: |_pos| > $bound overflows the ord " +
+          "encoding (_pos*16+i)")).cast("long"),
+      (pos * MaxOpsPerEvent + i).cast("long"))
+  }
+
+  /** [[run]] with a TOTAL op order ([[ord]]) attached, for structure-level
+    * application ([[graft.merge.SinkOpState]]): input events carry their
+    * stream position; `i` is the op's emission index within the event. At
     * most [[MaxOpsPerEvent]] ops per event (the reference's scripts emit a
     * handful; raise the shift if a transform needs more).
     */
   def runOrdered[T](ds: Dataset[(Long, T)], t: EventTransform[T]): DataFrame = {
-    val enc = Encoders.product[(String, String, String, String, Double, String, Long)]
+    val enc = Encoders.product[(String, String, String, String, Double, String, Long, Int)]
+    val cols = Seq("target", "action", "key", "field", "score", "value")
     ds.flatMap { case (pos, e) =>
       t(e).zipWithIndex.map { case (op, i) =>
         require(i < MaxOpsPerEvent,
           s"runOrdered: more than $MaxOpsPerEvent ops from one event")
-        (op.target, op.action, op.key, op.field, op.score, op.value,
-          pos * MaxOpsPerEvent + i)
+        (op.target, op.action, op.key, op.field, op.score, op.value, pos, i)
       }
-    }(enc).toDF("target", "action", "key", "field", "score", "value", "ord")
+    }(enc).toDF(cols :+ "_pos" :+ "_i": _*)
+      .select(cols.map(col) :+ ord(col("_pos"), col("_i")).as("ord"): _*)
   }
 }
 

@@ -24,53 +24,35 @@ final case class ExprOp(
   * from strings — AND it stays pure Catalyst: each op is a filtered
   * projection of the batch, unioned, so predicates/columns still prune and
   * codegen. n ops = n scan branches of the (cached) batch, the same shape
-  * the multi-table router uses.
+  * N routes of one engine flow take.
   */
 object ExprTransform {
-  def run(df: DataFrame, ops: Seq[ExprOp]): DataFrame = {
-    require(ops.nonEmpty, "ExprTransform needs at least one op")
-    ops.map { o =>
-      df.where(expr(o.when)).select(
-        lit(o.target).as("target"),
-        lit(o.action).as("action"),
-        expr(o.key).cast("string").as("key"),
-        expr(o.field).cast("string").as("field"),
-        expr(o.score).cast("double").as("score"),
-        expr(o.value).cast("string").as("value"))
-    }.reduce(_ unionAll _)
-  }
+  def run(df: DataFrame, ops: Seq[ExprOp]): DataFrame = emit(df, ops, ordered = false)
 
   /** [[run]] plus a TOTAL op order for structure-level application
-    * ([[graft.merge.SinkOpState]]): `ord = _pos * 16 + config-op-index` —
-    * stream order first, then declaration order, the order the reference's
-    * single-threaded applier executes a script's emitted ops in. Needs the
-    * decoded `_pos` on the input.
+    * ([[graft.merge.SinkOpState]]): [[EventTransform.ord]] of `_pos` and
+    * the config-op index — stream order first, then declaration order.
+    * Needs the decoded `_pos` on the input.
     */
   def runOrdered(df: DataFrame, ops: Seq[ExprOp]): DataFrame = {
-    require(ops.nonEmpty, "ExprTransform needs at least one op")
     require(ops.size <= EventTransform.MaxOpsPerEvent,
       s"at most ${EventTransform.MaxOpsPerEvent} ops per route (ord encoding)")
     require(df.columns.contains("_pos"),
       "runOrdered needs the decoded _pos column for the op order")
-    // _pos·16 wraps past Long.MaxValue/16 (and a MySQL fileIndex<<32|pos
-    // coordinate can reach that if the 32-bit offset validation upstream is
-    // bypassed): bound-check at runtime — assert_true is null on success,
-    // so the coalesce is the ord itself, and out-of-range rows raise
-    // instead of silently reordering the op stream
-    val ordBound = Long.MaxValue / EventTransform.MaxOpsPerEvent
+    emit(df, ops, ordered = true)
+  }
+
+  private def emit(df: DataFrame, ops: Seq[ExprOp], ordered: Boolean): DataFrame = {
+    require(ops.nonEmpty, "ExprTransform needs at least one op")
     ops.zipWithIndex.map { case (o, i) =>
-      df.where(expr(o.when)).select(
+      df.where(expr(o.when)).select(Seq(
         lit(o.target).as("target"),
         lit(o.action).as("action"),
         expr(o.key).cast("string").as("key"),
         expr(o.field).cast("string").as("field"),
         expr(o.score).cast("double").as("score"),
-        expr(o.value).cast("string").as("value"),
-        coalesce(assert_true(col("_pos").between(-ordBound, ordBound),
-            lit(s"runOrdered: |_pos| > $ordBound overflows the ord " +
-              "encoding (_pos*16+i)")).cast("long"),
-          (col("_pos") * EventTransform.MaxOpsPerEvent + i).cast("long"))
-          .as("ord"))
+        expr(o.value).cast("string").as("value")) ++
+        (if (ordered) Seq(EventTransform.ord(col("_pos"), lit(i)).as("ord")) else Nil): _*)
     }.reduce(_ unionAll _)
   }
 }

@@ -1,30 +1,17 @@
 package graft.streaming
 
-import graft.changelog.ChangelogCodec
 import graft.core.Types
 import graft.lake.LakeTable
-import graft.merge.{MergeInto, MergeResult}
+import graft.merge.MergeResult
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** The incremental-sync run (reference lifecycle §3.1 of SURVEY.md):
   * change-log tail → decode → micro-batch → idempotent MERGE → atomic
-  * commit, resumable from checkpoint.
-  *
-  * Mapping to the reference:
-  *  - canal.RunFrom(position) tail (transfer_service.go:106-134)
-  *      → `readStream` file source over the changelog dir; offsets live in
-  *        the checkpoint, the applied (epoch, pos) fence lives in the table.
-  *  - size/time flush (handler.go:135-194, bulk_size/flush_bulk_interval)
-  *      → `maxFilesPerTrigger` + processing-time trigger.
-  *  - save position after Consume (handler.go:173-191)
-  *      → the MERGE commit embeds (epoch, offset); a crash between sink
-  *        write and checkpoint save replays the batch, which the fence
-  *        no-ops — exactly-once table state instead of at-least-once.
-  *  - OnTableChanged schema refresh (handler.go:56-62)
-  *      → schema_id watermark per batch drives `evolveSchema` before decode.
+  * commit, resumable from checkpoint — the one-route flow of
+  * [[RouteEngine]], which holds the loop and its mapping to the reference.
+  * [[Config]] is the engine configuration every flow runs under.
   */
 object CdcPipeline {
 
@@ -104,143 +91,31 @@ object CdcPipeline {
     }
   }
 
-  /** Apply one micro-batch of wire-form events. Exposed for tests and the
+  /** The one-route flow: every decoded event MERGEs into `table`. */
+  def flow(table: LakeTable, cfg: Config): RouteEngine.Flow =
+    RouteEngine.Flow(Seq(RouteEngine.LakeRoute("table", table, cfg.registry)))
+
+  /** Apply one micro-batch of wire-form events (decode → MERGE sized by the
+    * trigger's row estimate → async compaction). Exposed for tests and the
     * batch replayer.
     */
-  private val debugTiming = sys.env.contains("GRAFT_TIMING")
-  private def timed[T](tag: String)(f: => T): T = {
-    if (!debugTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[timing] $tag ${(System.nanoTime() - t0) / 1e9}%.3fs " +
-        f"(at ${System.currentTimeMillis() % 1000000}ms)")
-      r
-    }
-  }
-
   def applyBatch(table: LakeTable, wire: DataFrame, epoch: Long,
-      cfg: Config, pipelineId: String = ""): MergeResult = timed(s"applyBatch($epoch)") {
-    // Decode against the newest registry schema (a superset — older events
-    // parse with nulls/wide types); the per-event _schema_id watermark rides
-    // into the merge stats and drives in-flight table evolution there
-    // (OnTableChanged analog) with no extra scan of the batch.
-    val newestSid = cfg.registry.keys.max
-    val decoded = ChangelogCodec.decode(wire, cfg.registry(newestSid))
-    val res = timed("merge")(
-      MergeInto.merge(table, decoded, epoch, cfg.saltedDedup, cfg.mergeMode,
-        cfg.registry, batchSchemaId = newestSid, pipelineId = pipelineId,
-        allowTakeover = cfg.allowPipelineTakeover, rowsHint = estimateRows(wire)))
-
-    // MOR maintenance: async amortized compaction keeps read-side resolve
-    // bounded without blocking ingest (rebase-safe vs concurrent merges).
-    MergeInto.maybeCompactAsync(table, cfg.autoCompactRatio, cfg.autoCompactMinRows)
-    res
-  }
+      cfg: Config, pipelineId: String = ""): MergeResult =
+    RouteEngine.applyBatch(flow(table, cfg), wire, epoch, cfg, pipelineId).values.head
 
   /** Start the continuous streaming query. */
   def start(spark: SparkSession, table: LakeTable, cfg: Config,
-      availableNow: Boolean = false): StreamingQuery = {
-    val wire = spark.readStream
-      .schema(Types.changeEventWireSchema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.changelogDir)
-    val pipelineId = resolvePipelineId(cfg.checkpointDir)
-    val writer = wire.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        withBatchRetries(cfg, batchId)(applyBatch(table, df, batchId, cfg, pipelineId)); ()
-      }
-    val triggered =
-      if (availableNow) writer.trigger(Trigger.AvailableNow())
-      else writer.trigger(Trigger.ProcessingTime(cfg.triggerMs))
-    triggered.start()
-  }
+      availableNow: Boolean = false): StreamingQuery =
+    RouteEngine.start(spark, flow(table, cfg), cfg, availableNow)
 
-  /** Cheap batch-size estimate from the trigger's input file sizes (driver
-    * namespace I/O only; ~20 bytes/event in the parquet wire format, biased
-    * LOW so big batches keep the full write fanout). Sizes the write
-    * exchange so a small trigger doesn't shatter into hundreds of near-empty
-    * files. -1 (unknown) on any surprise.
-    */
-  private def estimateRows(wire: DataFrame): Long = {
-    try {
-      val files = wire.inputFiles
-      if (files.isEmpty) -1L
-      else files.map { f =>
-        val u = java.net.URI.create(f)
-        if (u.getScheme == null || u.getScheme == "file")
-          new java.io.File(u.getPath).length()
-        else return -1L // non-local stores: skip the stat round-trips
-      }.sum / 20L
-    } catch { case _: Throwable => -1L }
-  }
-
-  /** In-place retry with backoff for transient sink/merge failures. Safe to
-    * retry blindly: a failed merge has not committed, and a merge that DID
-    * commit before the failure surfaced is fenced to a no-op on retry.
-    */
-  private[streaming] def withBatchRetries[T](cfg: Config, epoch: Long)(f: => T): T = {
-    var attempt = 0
-    while (true) {
-      try {
-        cfg.failureInjector.foreach(_(epoch))
-        return f
-      } catch {
-        // NonFatal only: OOM/interrupt/control-flow must propagate, not
-        // spin a dying JVM through more full merge attempts
-        case scala.util.control.NonFatal(e) if attempt < cfg.maxBatchRetries =>
-          attempt += 1
-          System.err.println(s"[graft] batch $epoch failed " +
-            s"(attempt $attempt/${cfg.maxBatchRetries}), retrying in " +
-            s"${cfg.retryBackoffMs} ms: $e")
-          Thread.sleep(cfg.retryBackoffMs)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Supervised run: restart the streaming query from its checkpoint after a
-    * terminal failure, up to `maxRestarts` times — the reference's
-    * endpoint-disable + 1 s ping-reconnect loop
-    * (service/transfer_service.go:328-354) as query supervision. Combined
-    * with [[withBatchRetries]], transient failures recover in place and
-    * poisoned-but-recoverable runs recover across restarts; a persistent
-    * failure still surfaces after the budget.
-    */
+  /** [[RouteEngine.runSupervised]] over the one-route flow. */
   def runSupervised(spark: SparkSession, table: LakeTable, cfg: Config,
-      availableNow: Boolean = true): Unit = {
-    var restarts = 0
-    while (true) {
-      val startedAt = System.nanoTime()
-      val q = start(spark, table, cfg, availableNow)
-      try {
-        q.awaitTermination()
-        return
-      } catch {
-        case scala.util.control.NonFatal(e)
-            if restarts < cfg.maxRestarts ||
-              (System.nanoTime() - startedAt) / 1000000L >= cfg.restartResetMs =>
-          // a healthy run longer than restartResetMs refunds the budget:
-          // the counter guards against crash LOOPS, not lifetime crash COUNT
-          if ((System.nanoTime() - startedAt) / 1000000L >= cfg.restartResetMs)
-            restarts = 0
-          restarts += 1
-          System.err.println(s"[graft] streaming query died " +
-            s"(restart $restarts/${cfg.maxRestarts} in ${cfg.restartBackoffMs} ms): " +
-            s"${e.getMessage}")
-          try q.stop() catch { case _: Throwable => }
-          Thread.sleep(cfg.restartBackoffMs)
-      }
-    }
-  }
+      availableNow: Boolean = true): Unit =
+    RouteEngine.runSupervised(spark, flow(table, cfg), cfg, availableNow)
 
   /** Drain everything currently in the changelog and stop (the test/bench
-    * entry): AvailableNow respects maxFilesPerTrigger, so the run still
-    * exercises the micro-batch + fence + commit path per chunk.
+    * entry). Does not wait for async compaction.
     */
-  def runToCompletion(spark: SparkSession, table: LakeTable, cfg: Config): Unit = {
-    val q = start(spark, table, cfg, availableNow = true)
-    q.awaitTermination()
-  }
+  def runToCompletion(spark: SparkSession, table: LakeTable, cfg: Config): Unit =
+    RouteEngine.runToCompletion(spark, flow(table, cfg), cfg)
 }

@@ -1,20 +1,16 @@
 package graft.streaming
 
-import graft.changelog.ChangelogCodec
 import graft.lake.LakeTable
-import graft.merge.{MergeInto, MergeResult}
-import graft.core.Types
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** S6 dynamic half: MID-STREAM wildcard route discovery. The reference
   * re-expands its `include_table_regex` against the database whenever tables
   * change and attaches freshly-built rules without a restart
   * (reference: service/transfer_service.go:213-237 wildcard expansion,
-  * 298-326 OnTableChanged rule rebuild). [[MultiTablePipeline]] covers the
-  * static half (routes fixed at start); here the route set is re-derived
-  * EVERY micro-batch from the routing column's observed values:
+  * 298-326 OnTableChanged rule rebuild). Static routes are fixed when a
+  * [[RouteEngine.Flow]] is built; here the route set is re-derived EVERY
+  * micro-batch from the routing column's observed values:
   *
   *   - each distinct `routeCol` value matching `pattern` is a logical table;
   *   - a value seen for the first time gets a LakeTable created under
@@ -28,7 +24,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Scale shape: the discovery aggregate collects only DISTINCT route values
   * (table names — thousands at most, never rows), and each route's merge is
-  * the same one-job MOR apply as the static pipeline. A lone-`*` pattern is
+  * the same one-job MOR apply as a static route; the engine persists the
+  * decoded batch for discovery plus its routes. A lone-`*` pattern is
   * rejected exactly like the reference (transfer_service.go:209-211).
   */
 object DynamicRoutePipeline {
@@ -47,6 +44,13 @@ object DynamicRoutePipeline {
       // is bootstrapped through [[Bootstrap.run]] before its first merge;
       // None (the default) keeps the born-with-the-stream behavior.
       snapshotDirFor: String => Option[String] = _ => None)
+
+  /** Snapshot resolution from a `{table}` dir pattern: the dir, when it
+    * exists.
+    */
+  def snapshotDirs(pattern: Option[String]): String => Option[String] = n =>
+    pattern.map(_.replace("{table}", n))
+      .filter(p => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
 
   /** Discovered routes — name → table, grown as the stream reveals new
     * matching values. foreachBatch bodies run sequentially, so a plain map
@@ -102,63 +106,30 @@ object DynamicRoutePipeline {
       t
     })
 
-  def applyBatch(spark: SparkSession, d: Config, state: State, wire: DataFrame,
-      epoch: Long, cfg: CdcPipeline.Config,
-      pipelineId: String = ""): Map[String, MergeResult] = {
+  /** Wildcard discovery as a flow: each batch's distinct matching route
+    * values become lake routes, each reading only its own rows.
+    */
+  def flow(spark: SparkSession, d: Config, state: State,
+      cfg: CdcPipeline.Config): RouteEngine.Flow = {
     require(d.pattern != "*" && d.pattern != ".*",
       "wildcard pattern must constrain the table name (reference: lone * is illegal)")
-    val newestSid = cfg.registry.keys.max
-    val decoded = ChangelogCodec.decode(wire, cfg.registry(newestSid))
-    val cached = decoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // discovery: the batch's distinct matching route values (small — table
-      // names, not rows; the aggregate is map-side combined)
-      val observed = cached.select(col(d.routeCol).cast("string").as("n"))
+    RouteEngine.Flow(Nil, discover = Some { batch =>
+      // the batch's distinct matching route values (small — table names,
+      // not rows; the aggregate is map-side combined)
+      batch.select(col(d.routeCol).cast("string").as("n"))
         .where(col("n").isNotNull).distinct().collect().map(_.getString(0))
-        .filter(n => n.matches(d.pattern) && safeSegment(n)).sorted
-      observed.map { name =>
-        val t = tableFor(spark, d, state, name, cfg)
-        name -> MergeInto.merge(t, cached.where(col(d.routeCol) === name),
-          epoch, cfg.saltedDedup, cfg.mergeMode, cfg.registry,
-          batchSchemaId = newestSid, pipelineId = pipelineId,
-          allowTakeover = cfg.allowPipelineTakeover)
-      }.toMap
-    } finally { cached.unpersist(); () }
+        .filter(n => n.matches(d.pattern) && safeSegment(n)).sorted.toSeq
+        .map(name => RouteEngine.LakeRoute(name, tableFor(spark, d, state, name, cfg),
+          cfg.registry, _.where(col(d.routeCol) === name)))
+    })
   }
 
-  def start(spark: SparkSession, d: Config, cfg: CdcPipeline.Config,
-      availableNow: Boolean = false): (StreamingQuery, State) = {
-    val state = new State
-    val wire = spark.readStream
-      .schema(Types.changeEventWireSchema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.changelogDir)
-    val pipelineId = CdcPipeline.resolvePipelineId(cfg.checkpointDir)
-    val writer = wire.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        // same per-batch contract as the other three pipelines: transient
-        // failures retry in place (merges are fenced-idempotent, and a retry
-        // re-discovers the same route set from the same batch), and every
-        // DISCOVERED table gets async MOR maintenance — without this,
-        // dynamically attached tables never compact and their read-side
-        // resolve cost grows without bound over a long stream
-        CdcPipeline.withBatchRetries(cfg, batchId)(
-          applyBatch(spark, d, state, df, batchId, cfg, pipelineId))
-        state.tables.values.foreach(t =>
-          MergeInto.maybeCompactAsync(t, cfg.autoCompactRatio, cfg.autoCompactMinRows))
-        ()
-      }
-    val q = (if (availableNow) writer.trigger(Trigger.AvailableNow())
-      else writer.trigger(Trigger.ProcessingTime(cfg.triggerMs))).start()
-    (q, state)
-  }
-
+  /** Drain, then join async compaction of the discovered tables. */
   def runToCompletion(spark: SparkSession, d: Config,
       cfg: CdcPipeline.Config): State = {
-    val (q, state) = start(spark, d, cfg, availableNow = true)
-    q.awaitTermination()
-    MergeInto.awaitCompaction()
+    val state = new State
+    RouteEngine.runToCompletion(spark, flow(spark, d, state, cfg), cfg,
+      awaitMaintenance = true)
     state
   }
 }

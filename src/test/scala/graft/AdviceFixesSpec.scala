@@ -4,7 +4,7 @@ import graft.changelog.ChangelogCodec
 import graft.functions.{Dedup, Packing}
 import graft.lake.LakeTable
 import graft.merge.MergeInto
-import graft.rules.{ExprOp, ExprTransform}
+import graft.rules.{EventTransform, ExprOp, ExprTransform, SinkOp}
 import graft.sources.GraftStreamSource
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -121,6 +121,23 @@ class AdviceFixesSpec extends SparkSpec {
     val e = intercept[Exception](
       ExprTransform.runOrdered(df(Long.MaxValue / 16 + 1), ops).collect())
     assert(e.toString.contains("overflows the ord"), s"wrong failure: $e")
+    // the typed EventTransform path shares the encoding and its bound
+    val one = new EventTransform[String] {
+      def apply(k: String): Iterator[SinkOp] = Iterator(SinkOp("redis", "SET", k))
+    }
+    def typed(pos: Long) = EventTransform.runOrdered(Seq((pos, "k1")).toDS(), one)
+    assert(typed(Long.MaxValue / 16).select("ord").as[Long].head() ==
+      (Long.MaxValue / 16) * 16)
+    val et = intercept[Exception](typed(Long.MaxValue / 16 + 1).collect())
+    assert(et.toString.contains("overflows the ord"), s"wrong failure: $et")
+  }
+
+  test("decodeDebezium keeps its diagnostic on a SQL-NULL wire value (a " +
+    "Kafka tombstone record)") {
+    val wire = Seq(Some("""{"after":{"k":"a","v":1},"op":"c","ts_ms":1}"""),
+      None).toDF("value")
+    val e = intercept[Exception](ChangelogCodec.decodeDebezium(wire, schema).collect())
+    assert(e.toString.contains("undecodable envelope"), s"wrong failure: $e")
   }
 
   test("decontaminate: degenerate docs (blank or fewer tokens than " +

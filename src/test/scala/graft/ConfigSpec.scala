@@ -6,7 +6,7 @@ import graft.core.Types
 import graft.lake.LakeTable
 import graft.oracle.ReferenceOracle
 import graft.rules.{ExprOp, ExprTransform}
-import graft.streaming.ConfigPipeline
+import graft.streaming.{ConfigPipeline, Feed}
 import org.apache.spark.sql.functions._
 
 /** Config-file-driven pipelines (the reference's app.yml UX) + runtime
@@ -63,7 +63,7 @@ class ConfigSpec extends SparkSpec {
       s"missing=${missing.take(3)} extra=${extra.take(3)} diff=${diff.take(3)}")
 
     // changefeed route: one keyed message per non-delete event, exactly once
-    val feed = ConfigPipeline.readFeed(spark, s"$work/feed")
+    val feed = Feed.readFeed(spark, s"$work/feed")
     val nonDeletes = decoded.where($"_op" =!= "delete").count()
     assert(feed.count() == nonDeletes)
     assert(feed.columns.toSeq == Seq("key", "value"))
@@ -90,7 +90,8 @@ class ConfigSpec extends SparkSpec {
     val c = GraftConfig.load(cfgFile.toString)
 
     // kill mid-stream: stop after at least one committed micro-batch
-    val q = ConfigPipeline.start(spark, c)
+    val q = graft.streaming.RouteEngine.start(spark, ConfigPipeline.flow(spark, c),
+      ConfigPipeline.pipelineConfig(c))
     val deadline = System.currentTimeMillis() + 60000
     def epochs() = {
       val d = java.nio.file.Paths.get(s"$work/feed")
@@ -103,7 +104,7 @@ class ConfigSpec extends SparkSpec {
 
     // resume from checkpoint and drain: message count == event count EXACTLY
     ConfigPipeline.runToCompletion(spark, c)
-    assert(ConfigPipeline.readFeed(spark, s"$work/feed").count() == 6000)
+    assert(Feed.readFeed(spark, s"$work/feed").count() == 6000)
 
     // crash-replay emulation (separate out dir so the stream's numbering is
     // untouched): a crash between sink write and checkpoint save re-runs the
@@ -116,8 +117,38 @@ class ConfigSpec extends SparkSpec {
     val n0 = wire.count()
     ConfigPipeline.applyBatch(routes2, wire, 0L, c2, "test-pipe")
     ConfigPipeline.applyBatch(routes2, wire, 0L, c2, "test-pipe") // replay
-    assert(ConfigPipeline.readFeed(spark, s"$work/feed2").count() == n0,
+    assert(Feed.readFeed(spark, s"$work/feed2").count() == n0,
       "replayed epoch appended duplicates")
+  }
+
+  test("a YAML lake route on a coarse table writes as many files per commit " +
+    "as CdcPipeline.applyBatch on the same batch") {
+    val work = tmpDir("cfg-width")
+    val log = s"$work/log"
+    ChangelogGenerator.write(spark, ChangelogSpec(nEvents = 4000,
+      nConversations = 100, chunkSize = 1000, dupEvery = 0), log)
+    val wire = spark.read.schema(Types.changeEventWireSchema).parquet(log)
+    // 2 buckets under local[4]: the full write width salts every bucket
+    val c = GraftConfig.parse(
+      s"""changelog_dir: $log
+         |checkpoint_dir: $work/cp
+         |routes:
+         |  - name: t
+         |    target: lake
+         |    table_dir: $work/yaml
+         |    key_columns: [conv_id, turn_idx]
+         |    bucket_columns: [conv_id]
+         |    num_buckets: 2
+         |""".stripMargin)
+    ConfigPipeline.applyBatch(ConfigPipeline.build(spark, c), wire, 0L, c, "width-pipe")
+    val cdc = LakeTable.create(spark, s"$work/cdc", Types.transcriptSchemaV0,
+      Seq("conv_id", "turn_idx"), Seq("conv_id"), 2)
+    graft.streaming.CdcPipeline.applyBatch(cdc, wire, 0L,
+      graft.streaming.CdcPipeline.Config(log, ""))
+    val yamlFiles = LakeTable.load(spark, s"$work/yaml").refresh().files.size
+    val cdcFiles = cdc.refresh().files.size
+    assert(yamlFiles == cdcFiles,
+      s"YAML route wrote $yamlFiles files, CdcPipeline $cdcFiles")
   }
 
   test("changefeed feed retention: foldFeed is lossless and bounds the dir count") {
@@ -140,7 +171,7 @@ class ConfigSpec extends SparkSpec {
     java.nio.file.Files.write(cfgFile, yaml.getBytes("UTF-8"))
     val c = GraftConfig.load(cfgFile.toString)
     ConfigPipeline.runToCompletion(spark, c)
-    def rows() = ConfigPipeline.readFeed(spark, s"$work/feed").collect()
+    def rows() = Feed.readFeed(spark, s"$work/feed").collect()
       .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
     def nDirs() = {
       val s = java.nio.file.Files.list(java.nio.file.Paths.get(s"$work/feed"))
@@ -152,12 +183,12 @@ class ConfigSpec extends SparkSpec {
     val before = rows()
     assert(before.size == 6000)
     assert(nDirs() >= 10, s"~12 chunks at 1 file/trigger, got ${nDirs()}")
-    val fc = ConfigPipeline.foldFeed(spark, s"$work/feed", retainLast = 3).get
+    val fc = Feed.foldFeed(spark, s"$work/feed", retainLast = 3).get
     assert(fc.watermark >= 0 && fc.dirs.size == 1 && rows() == before,
       "fold must be invisible to readFeed")
     // folded dirs linger one cycle (deferred cleanup for in-flight readers);
     // the NEXT invocation reclaims them down to the replayable tail
-    ConfigPipeline.foldFeed(spark, s"$work/feed", retainLast = 3)
+    Feed.foldFeed(spark, s"$work/feed", retainLast = 3)
     assert(nDirs() == 3, s"deferred cleanup left ${nDirs()} dirs, want 3")
     assert(rows() == before)
     // the stream keeps writing after a fold: new epochs land live and
@@ -170,16 +201,16 @@ class ConfigSpec extends SparkSpec {
     assert(nDirs() == 4)
     // a further fold is MINOR: it writes only the newly folded epochs as a
     // new generation — the first generation's dir is not rewritten
-    val fc2 = ConfigPipeline.foldFeed(spark, s"$work/feed", retainLast = 1).get
+    val fc2 = Feed.foldFeed(spark, s"$work/feed", retainLast = 1).get
     assert(fc2.dirs.size == 2 && fc2.dirs.head == fc.dirs.head,
       s"minor fold must append a generation, got ${fc2.dirs}")
-    ConfigPipeline.foldFeed(spark, s"$work/feed", retainLast = 1)
+    Feed.foldFeed(spark, s"$work/feed", retainLast = 1)
     assert(nDirs() == 1)
     assert(rows().size == before.size + wire.count())
     // generation threshold: the next fold with maxGenerations=1 is MAJOR —
     // all generations merge into one dir, still lossless
     ConfigPipeline.applyBatch(routes, wire, 100L, c, "test-pipe")
-    val fc3 = ConfigPipeline.foldFeed(spark, s"$work/feed",
+    val fc3 = Feed.foldFeed(spark, s"$work/feed",
       retainLast = 1, maxGenerations = 1).get
     assert(fc3.dirs.size == 1, s"major fold must merge generations, got ${fc3.dirs}")
     assert(rows().size == before.size + 2 * wire.count())
@@ -192,7 +223,7 @@ class ConfigSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(ghost.toString)
     assert(rows().size == before.size + 2 * wire.count(),
       "stale folded dir leaked into readFeed")
-    ConfigPipeline.foldFeed(spark, s"$work/feed", retainLast = 1)
+    Feed.foldFeed(spark, s"$work/feed", retainLast = 1)
     assert(!java.nio.file.Files.exists(ghost), "next fold must reclaim the stale dir")
     assert(rows().size == before.size + 2 * wire.count())
   }
@@ -220,15 +251,15 @@ class ConfigSpec extends SparkSpec {
     val c = GraftConfig.load(cfgFile.toString)
     assert(c.feedFoldEvery == 4L && c.feedRetainEpochs == 2)
     ConfigPipeline.runToCompletion(spark, c)
-    def rows() = ConfigPipeline.readFeed(spark, s"$work/feed").count()
+    def rows() = Feed.readFeed(spark, s"$work/feed").count()
     // ~24 one-file triggers ⇒ the every-4 cadence fired several times; at
     // least one async fold committed its pointer, and not a message was lost
     assert(rows() == 6000)
-    assert(ConfigPipeline.readFoldCommit(s"$work/feed").nonEmpty,
+    assert(Feed.readFoldCommit(s"$work/feed").nonEmpty,
       "auto-fold never committed during the stream")
     // one more synchronous fold reclaims anything the deferred cleanup left
-    ConfigPipeline.foldFeed(spark, s"$work/feed", retainLast = 2)
-    ConfigPipeline.foldFeed(spark, s"$work/feed", retainLast = 2)
+    Feed.foldFeed(spark, s"$work/feed", retainLast = 2)
+    Feed.foldFeed(spark, s"$work/feed", retainLast = 2)
     val s = java.nio.file.Files.list(java.nio.file.Paths.get(s"$work/feed"))
     val n = try {
       import scala.jdk.CollectionConverters._
@@ -270,7 +301,7 @@ class ConfigSpec extends SparkSpec {
 
     // the table is created at the registry's OLDEST version…
     val built = ConfigPipeline.build(spark, c)
-    val m0 = built.head.table.meta
+    val m0 = built.head.asInstanceOf[graft.streaming.RouteEngine.LakeRoute].table.meta
     assert(m0.schemaId == 0)
     assert(m0.schema("turn_idx").dataType == IntegerType)
     assert(!m0.schema.fieldNames.contains("lang"))
@@ -553,7 +584,7 @@ class ConfigSpec extends SparkSpec {
     assert(state.snapshot().where($"structure" === "list").count() > 0 &&
       state.snapshot().where($"structure" === "string").count() > 0)
     // the feed carries the same op rows WITH the total order
-    val feed = ConfigPipeline.readFeed(spark, s"$work/feed")
+    val feed = Feed.readFeed(spark, s"$work/feed")
     assert(feed.columns.contains("ord"))
     // draining again from the same checkpoint: no new data, state unchanged
     val v = state.refresh().version

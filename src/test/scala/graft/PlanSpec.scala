@@ -82,6 +82,73 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Scan parquet"), s"merge write plan must not scan the table:\n$p")
   }
 
+  /** Optimized plans of the queries `f` runs. Listener callbacks arrive
+    * asynchronously but in order, so a marker query flushes them.
+    */
+  private def plansOf(f: => Unit): Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = { seen.add(qe); () }
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val marker = s"plan-gate-${java.util.UUID.randomUUID()}"
+    spark.listenerManager.register(l)
+    try {
+      f
+      spark.range(1).select(lit(marker)).collect()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.toArray.exists(_.toString.contains(marker)) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.filterNot(_.toString.contains(marker)).map(_.optimizedPlan)
+  }
+
+  /** Scans of files under `dir` across `plans`, each cached relation
+    * counted once however many plans read it.
+    */
+  private def scansOf(plans: Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
+      dir: String): Int = {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    def direct(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int = p.collect {
+      case r: LogicalRelation if (r.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.exists(_.toString.contains(dir))
+        case _ => false
+      }) => r
+    }.size
+    val caches = plans.flatMap(_.collect { case m: InMemoryRelation => m.cacheBuilder })
+      .groupBy(System.identityHashCode).values.map(_.head)
+    plans.map(direct).sum + caches.map(b => direct(b.logicalPlan)).sum
+  }
+
+  test("route engine: a one-route apply persists nothing; a two-route apply " +
+    "decodes (scans the wire) once") {
+    import graft.streaming.{CdcPipeline, RouteEngine}
+    val work = tmpDir("plan-engine")
+    val log = work.resolve("log").toString
+    graft.changelog.ChangelogGenerator.write(spark, graft.changelog.ChangelogSpec(
+      nEvents = 2000, nConversations = 50, chunkSize = 1000, dupEvery = 0), log)
+    val wire = spark.read.schema(Types.changeEventWireSchema).parquet(log)
+    val cfg = CdcPipeline.Config(log, "")
+    def table(n: String) = LakeTable.create(spark, work.resolve(n).toString,
+      Types.transcriptSchemaV0, Types.transcriptKey, Seq("conv_id"), 4)
+
+    val one = plansOf(CdcPipeline.applyBatch(table("one"), wire, 0L, cfg))
+    assert(one.nonEmpty && scansOf(one, log) == 1, s"one-route plans:\n${one.mkString("\n")}")
+    assert(!one.exists(_.toString.contains("InMemoryRelation")),
+      s"one-route apply must not persist the batch:\n${one.mkString("\n")}")
+
+    val (a, b) = (table("a"), table("b"))
+    val two = plansOf(RouteEngine.applyBatch(RouteEngine.Flow(Seq(
+      RouteEngine.LakeRoute("a", a, cfg.registry, _.where(col("role") === "user")),
+      RouteEngine.LakeRoute("b", b, cfg.registry, _.where(col("role") =!= "user")))),
+      wire, 0L, cfg))
+    assert(scansOf(two, log) == 1, s"two routes must share one decode:\n${two.mkString("\n")}")
+    assert(a.refresh().lastEpoch == 0 && b.refresh().lastEpoch == 0)
+  }
+
   test("LWW dedup uses partial aggregation (map-side combine before exchange)") {
     val dedup = MergeInto.lwwDedup(QueryCatalog.eventsAsChanges(spark, sf),
       Seq("user_id", "slot"))

@@ -4,7 +4,7 @@ import graft.changelog.{ChangelogCodec, ChangelogGenerator, ChangelogSpec}
 import graft.core.Types
 import graft.lake.LakeTable
 import graft.oracle.ReferenceOracle
-import graft.streaming.{CdcPipeline, ChangefeedSink, Metrics, MultiTablePipeline}
+import graft.streaming.{CdcPipeline, Feed, Metrics, RouteEngine}
 import org.apache.spark.sql.functions._
 
 /** Multi-table routing, changefeed-out sink, and streaming metrics. */
@@ -22,11 +22,11 @@ class StreamingExtrasSpec extends SparkSpec {
     def mk(n: String) = LakeTable.create(spark, s"$tmp/$n", transcriptSchemaV0,
       keys, Seq("conv_id"), 4)
     val tUser = mk("user"); val tOther = mk("other")
-    val routes = Seq(
-      MultiTablePipeline.Route("user", col("role") === "user", tUser),
-      MultiTablePipeline.Route("other", col("role") =!= "user", tOther))
     val cfg = CdcPipeline.Config(log, s"$tmp/cp", maxFilesPerTrigger = 16)
-    MultiTablePipeline.runToCompletion(spark, routes, cfg)
+    val routes = Seq(
+      RouteEngine.LakeRoute("user", tUser, cfg.registry, _.where(col("role") === "user")),
+      RouteEngine.LakeRoute("other", tOther, cfg.registry, _.where(col("role") =!= "user")))
+    RouteEngine.runToCompletion(spark, RouteEngine.Flow(routes), cfg, awaitMaintenance = true)
 
     // oracle: decode everything, split by the same predicates, replay each
     val wire = spark.read.schema(changeEventWireSchema).parquet(log)
@@ -78,7 +78,8 @@ class StreamingExtrasSpec extends SparkSpec {
       Seq("conv_id", "turn_idx"), Seq("conv_id"), 4)
     val cfg = CdcPipeline.Config(log, s"$tmp/cp", maxFilesPerTrigger = 1,
       triggerMs = 100)
-    val (q, state) = DynamicRoutePipeline.start(spark, d, cfg)
+    val state = new DynamicRoutePipeline.State
+    val q = RouteEngine.start(spark, DynamicRoutePipeline.flow(spark, d, state, cfg), cfg)
     try {
       val deadline = System.currentTimeMillis() + 90000
       while (!state.tables.contains("tbl_a") &&
@@ -98,7 +99,7 @@ class StreamingExtrasSpec extends SparkSpec {
       .where(col("tool") =!= "tbl_b").count() == 0)
     // lone-* rejected, like the reference
     intercept[IllegalArgumentException] {
-      DynamicRoutePipeline.applyBatch(spark, d.copy(pattern = "*"), state,
+      RouteEngine.applyBatch(DynamicRoutePipeline.flow(spark, d.copy(pattern = "*"), state, cfg),
         spark.read.schema(changeEventWireSchema).parquet(log), 99L, cfg)
     }
   }
@@ -209,7 +210,7 @@ class StreamingExtrasSpec extends SparkSpec {
       Seq("conv_id", "turn_idx"), Seq("conv_id"), 2)
     val cfg = CdcPipeline.Config(s"$tmp/log", s"$tmp/cp", registry = Map(0 -> custom))
     val state = new DynamicRoutePipeline.State
-    DynamicRoutePipeline.applyBatch(spark, d, state, wire, 0L, cfg)
+    RouteEngine.applyBatch(DynamicRoutePipeline.flow(spark, d, state, cfg), wire, 0L, cfg)
     // create-time schema comes from cfg.registry, not the built-in transcript
     // constants: the custom column must survive create + merge + snapshot
     val t = state.tables("tbl_z")
@@ -225,15 +226,15 @@ class StreamingExtrasSpec extends SparkSpec {
       ChangelogSpec(nEvents = 5000, nConversations = 100, chunkSize = 1000,
         dupEvery = 0), log)
     val cfg = CdcPipeline.Config(log, s"$tmp/cp", maxFilesPerTrigger = 8)
-    ChangefeedSink.runToCompletion(spark, cfg, s"$tmp/out", reserveRawData = true)
-    val out = ChangefeedSink.read(spark, s"$tmp/out")
+    RouteEngine.runToCompletion(spark, Feed.changefeed(s"$tmp/out", reserveRawData = true), cfg)
+    val out = Feed.readFeed(spark, s"$tmp/out")
     assert(out.count() == 5000)
     assert(out.columns.toSeq == Seq("key", "value"))
     val sample = out.limit(1).collect().head.getAs[String]("value")
     assert(sample.contains(""""action":""") && sample.contains(""""date":"""))
     // re-running the drained stream appends nothing (checkpointed offsets)
-    ChangefeedSink.runToCompletion(spark, cfg, s"$tmp/out", reserveRawData = true)
-    assert(ChangefeedSink.read(spark, s"$tmp/out").count() == 5000)
+    RouteEngine.runToCompletion(spark, Feed.changefeed(s"$tmp/out", reserveRawData = true), cfg)
+    assert(Feed.readFeed(spark, s"$tmp/out").count() == 5000)
   }
 
   test("spark.readStream.format(\"graft\"): tail a lake table's commits — " +
